@@ -100,17 +100,9 @@ object AnnBench {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("GRAFT_ANN_N", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val queryMod = math.max(1L, n / 50) // ~50 probe queries
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get("graft-ann-bench")
 
     val dir = s"/root/repo/target/annbench/sf_ann$n"
     Files.createDirectories(Paths.get(dir))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.core._
 import graft.kg.{DocGen, Mentions}
 
@@ -21,9 +20,7 @@ object CalibMain {
     require(mode == "base" || mode == "ml",
       s"unknown mode '$mode' — usage: CalibMain [base|ml] [sfDir]")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.get("graft-calib")
     val docs = DocGen.docs(spark, sfDir)
     val sample = docs.orderBy("doc_id").limit(80).collect().toSeq
       .map(_.spans.filter(_.kind == "text").sortBy(_.offset).map(_.text)).filter(_.nonEmpty)

@@ -3,26 +3,20 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: dumps `.explain("formatted")` of the headline pipeline
   * stages + representative queries to PLANS.md for plan-hygiene review
-  * (pushdown, pruning, broadcast, codegen spans).
-  * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  * (pushdown, pruning, broadcast, codegen spans). Naming queries dumps only
+  * those, in the order given.
+  * Usage: runMain graft.PlanDump [sfDir] [outFile] [query...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.get("graft-plan-dump")
 
-    val picks = Seq(
+    val named = args.drop(2).toSeq
+    val picks = if (named.nonEmpty) named else Seq(
       "kg_docs", "kg_mentions", "kg_dict", "kg_linked", "kg_triples",
       "kg_mentions_ctx_slice", "kg_mentions_ctx_bucketed", "kg_mentions_st",
       "mm_decode_png",

@@ -8,37 +8,29 @@ package graft.core
   * `nn.Linear`, `nn.LSTM` (gate order i,f,g,o), `nn.Conv1d(kernel_size=2)`,
   * `nn.LayerNorm(eps=1e-5)` — at inference (eval mode: dropout = identity).
   */
-/** Runtime gate + transpose cache for the SIMD GEMV kernels
-  * ([[SimdKernels]]): vectorization is across OUTPUT lanes over transposed
-  * weights, so every output element's FP accumulation order is unchanged —
-  * results are bit-exact vs the scalar kernels (asserted by NnSimdSpec).
-  * Falls back to the scalar path when the jdk.incubator.vector module is
-  * absent or `-Dgraft.simd=off` is set.
+/** Platform gate + transpose for the SIMD GEMV kernels ([[SimdKernels]]):
+  * vectorization is across OUTPUT lanes over transposed weights, so every
+  * output element's FP accumulation order is unchanged — results are
+  * bit-exact vs the scalar kernels (asserted by NnSimdSpec). Falls back to
+  * the scalar path when the jdk.incubator.vector module is absent. The
+  * weight objects hold their transposed copies as `@transient lazy val`s,
+  * built once per JVM.
   */
 object Simd {
   val enabled: Boolean =
-    try {
-      SimdKernels.probe()
-      !sys.props.get("graft.simd").contains("off") &&
-        !sys.env.get("GRAFT_NO_SIMD").contains("1")
-    } catch { case _: Throwable => false }
+    try { SimdKernels.probe(); true } catch { case _: Throwable => false }
 
-  /** identity-keyed transpose cache: weight arrays are broadcast-shared per
-    * JVM, so the handful of live models yields a handful of entries; the
-    * transpose itself is a pure copy (no arithmetic).
-    */
-  private val tCache = new java.util.concurrent.ConcurrentHashMap[Array[Float], Array[Float]]()
-  def transposed(w: Array[Float], inDim: Int, outDim: Int): Array[Float] =
-    tCache.computeIfAbsent(w, _ => {
-      val t = new Array[Float](inDim * outDim)
-      var o = 0
-      while (o < outDim) {
-        var i = 0
-        while (i < inDim) { t(i * outDim + o) = w(o * inDim + i); i += 1 }
-        o += 1
-      }
-      t
-    })
+  /** [outDim × inDim] row-major → [inDim × outDim]; a pure copy */
+  def transpose(w: Array[Float], inDim: Int, outDim: Int): Array[Float] = {
+    val t = new Array[Float](inDim * outDim)
+    var o = 0
+    while (o < outDim) {
+      var i = 0
+      while (i < inDim) { t(i * outDim + o) = w(o * inDim + i); i += 1 }
+      o += 1
+    }
+    t
+  }
 }
 
 object Nn {
@@ -57,6 +49,8 @@ object Nn {
   }
 
   /** y[o] = b[o] + Σ_i W[o*inDim + i] * x[xOff + i]; W row-major [outDim × inDim].
+    * `wT` is W transposed ([[Simd.transpose]]) for the SIMD path, or null to
+    * stay on the scalar loop.
     *
     * Register-blocked over OUTPUT rows (4 at a time): each x load feeds 4
     * independent accumulator chains, breaking the one-add-per-FP-latency
@@ -65,12 +59,13 @@ object Nn {
     * unblocked loop.
     */
   def dense(w: Array[Float], b: Array[Float], inDim: Int, outDim: Int,
-            x: Array[Float], xOff: Int, y: Array[Float], yOff: Int): Unit = {
+            x: Array[Float], xOff: Int, y: Array[Float], yOff: Int,
+            wT: Array[Float] = null): Unit = {
     // SIMD path (bit-exact, see Simd): only when the output is wide enough to
-    // fill vector lanes — the tiny head/remedy denses (outDim 6/10) stay on
-    // the register-blocked scalar loop below
-    if (Simd.enabled && outDim >= 16) {
-      SimdKernels.gemvT(Simd.transposed(w, inDim, outDim), b, inDim, outDim, x, xOff, y, yOff)
+    // fill vector lanes — the tiny head/remedy denses (outDim 6/10) pass no
+    // wT and stay on the register-blocked scalar loop below
+    if (wT != null && Simd.enabled && outDim >= 16) {
+      SimdKernels.gemvT(wT, b, inDim, outDim, x, xOff, y, yOff)
       return
     }
     var o = 0
@@ -127,8 +122,8 @@ final class LstmCell(val inDim: Int, val hidden: Int,
   // precomputed bIh+bHh sum, built lazily once per JVM (thread-safe lazy val;
   // the cell instance is broadcast-shared across tasks)
   @transient private lazy val useSimd = Simd.enabled && 4 * hidden >= 16
-  @transient private lazy val wIhT = Simd.transposed(wIh, inDim, 4 * hidden)
-  @transient private lazy val wHhT = Simd.transposed(wHh, hidden, 4 * hidden)
+  @transient private lazy val wIhT = Simd.transpose(wIh, inDim, 4 * hidden)
+  @transient private lazy val wHhT = Simd.transpose(wHh, hidden, 4 * hidden)
   @transient private lazy val bSum = {
     val s = new Array[Float](4 * hidden)
     var j = 0
@@ -223,8 +218,8 @@ final class Conv2Tap(val inCh: Int, val outCh: Int,
                      val b: Array[Float]) extends Serializable {
   // SIMD support (bit-exact, see Simd): transposed tap copies, once per JVM
   @transient private lazy val useSimd = Simd.enabled && outCh >= 16
-  @transient private lazy val w0T = Simd.transposed(w0, inCh, outCh)
-  @transient private lazy val w1T = Simd.transposed(w1, inCh, outCh)
+  @transient private lazy val w0T = Simd.transpose(w0, inCh, outCh)
+  @transient private lazy val w1T = Simd.transpose(w1, inCh, outCh)
 
   def run(x: Array[Float], xOff: Int, len: Int, y: Array[Float], yOff: Int): Unit = {
     if (useSimd) {

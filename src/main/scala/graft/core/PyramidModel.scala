@@ -63,7 +63,11 @@ final class PyramidWeights(
     val conv: Conv2Tap,
     val headW: Array[Float], val headB: Array[Float],       // [(C+1) × encOut]
     val remedyW: Array[Float], val remedyB: Array[Float]    // [2C × encOut]
-) extends Serializable
+) extends Serializable {
+  /** encDenseW transposed for the SIMD dense path, built once per JVM */
+  @transient lazy val encDenseWT: Array[Float] =
+    Simd.transpose(encDenseW, 2 * cfg.encHidden, cfg.encOut)
+}
 
 object PyramidWeights {
   private def lstm(seed: Long, name: String, inDim: Int, hidden: Int): LstmCell =
@@ -197,9 +201,10 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     }
     // 2. sentence encoder: BiLSTM → dense
     w.encLstm.run(xIn, 0, S, encH, 0, hS, cS, gS)
+    val wT = w.encDenseWT
     t = 0
     while (t < S) {
-      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encH, t * 2 * cfg.encHidden, cur, t * D)
+      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encH, t * 2 * cfg.encHidden, cur, t * D, wT)
       t += 1
     }
   }
@@ -226,9 +231,10 @@ final class PyramidInference(w: PyramidWeights, vocab: WordVocab) {
     }
     val encHL = new Array[Float](S * 2 * cfg.encHidden)
     encExt.run(xEx, 0, S, encHL, 0, hS, cS, gS)
+    val wT = w.encDenseWT
     t = 0
     while (t < S) {
-      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encHL, t * 2 * cfg.encHidden, cur, t * D)
+      Nn.dense(w.encDenseW, w.encDenseB, 2 * cfg.encHidden, D, encHL, t * 2 * cfg.encHidden, cur, t * D, wT)
       t += 1
     }
   }

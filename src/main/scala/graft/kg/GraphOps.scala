@@ -1,5 +1,7 @@
 package graft.kg
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -461,9 +463,16 @@ object GraphOps {
     out
   }
 
+  /** Spark's string order: unsigned UTF-8 bytes. Scala's own (UTF-16) order
+    * puts a non-BMP character (a surrogate pair) before U+E000-U+FFFF.
+    */
+  private val Utf8Order: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
   /** the same [[LpaIters]] synchronous rounds (most-frequent neighbor label,
-    * ties to the MINIMUM label) as a driver loop over the collected symmetric
-    * edge list — exact semantics, small graphs only (callers size-guard).
+    * ties to the MINIMUM label in [[Utf8Order]]) as a driver loop over the
+    * collected symmetric edge list — exact semantics, small graphs only
+    * (callers size-guard).
     */
   private def labelPropDriver(sym: DataFrame): DataFrame = {
     val spark = sym.sparkSession
@@ -476,7 +485,8 @@ object GraphOps {
         val freq = scala.collection.mutable.HashMap.empty[String, Long]
         vs.foreach(v => freq(labels(v)) = freq.getOrElse(labels(v), 0L) + 1L)
         // max count, tie -> minimum label (the window's c desc, label asc)
-        u -> freq.toSeq.minBy { case (l, c) => (-c, l) }._1
+        u -> freq.toSeq.minBy { case (l, c) => (-c, l) }(
+          Ordering.Tuple2(Ordering.Long, Utf8Order))._1
       }
     }
     val sizes = labels.values.groupBy(identity).map { case (l, c) => l -> c.size.toLong }

@@ -32,8 +32,8 @@ import graft.core.ModelConfig
   */
 object KgStream {
 
-  // memory-sink query names must be unique within a JVM (QueryBench repeats
-  // queries in one session; a finished query's name stays registered)
+  // a per-JVM sequence number keeps each run's memory-sink query name and
+  // view apart (Bench and QueryBench repeat this query in one session)
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger
 
   /** Streaming mention detection + linking over the eval slice of

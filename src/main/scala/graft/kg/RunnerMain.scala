@@ -1,6 +1,6 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** The spark-submit entry point of the KG-construction pipeline
   * (north_star: "ships as a spark-submit job"):
@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   *   spark-submit --class graft.kg.RunnerMain graft.jar \
   *     <inputSfDir> <outDir> [buckets] [resume]
   *
-  * On a cluster the builder omits `.master(...)` and spark-submit supplies
-  * it; in this sandbox `SPARK_GRAFT_CPUS` selects local[N] so the same main
+  * Under spark-submit the cluster's master applies; run directly, the main
+  * falls back to `local[N]` (see [[graft.Session]]), so the same main
   * drives both. Re-running with the same outDir RESUMES: buckets with a
   * committed manifest are skipped (KgRunner semantics — at most one bucket's
   * work is lost to a kill).
@@ -22,15 +22,7 @@ object RunnerMain {
     val Array(sfDir, outDir) = args.take(2)
     val buckets = args.lift(2).map(_.toInt).getOrElse(32)
     val amplify = args.lift(3).map(_.toInt).getOrElse(1)
-    val builder = SparkSession.builder()
-      .appName("graft-kg-runner")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-    // local fallback for the sandbox; spark-submit on a cluster sets master
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS")
-    val spark = cpus.fold(builder)(c => builder.master(s"local[$c]")
-      .config("spark.sql.shuffle.partitions", c)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.get("graft-kg-runner")
 
     val t0 = System.nanoTime()
     val report = KgRunner.run(spark, sfDir, outDir, buckets, amplify = amplify)

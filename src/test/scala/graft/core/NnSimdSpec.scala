@@ -28,7 +28,7 @@ class NnSimdSpec extends AnyFunSuite {
       val b = rnd(7 + outDim, outDim)
       val x = rnd(11 + inDim, inDim + 5)
       val got = new Array[Float](outDim + 2)
-      Nn.dense(w, b, inDim, outDim, x, 5, got, 2)
+      Nn.dense(w, b, inDim, outDim, x, 5, got, 2, Simd.transpose(w, inDim, outDim))
       for (o <- 0 until outDim) {
         var acc = b(o)
         for (i <- 0 until inDim) acc += w(o * inDim + i) * x(5 + i)
@@ -96,8 +96,8 @@ class NnSimdSpec extends AnyFunSuite {
         naive(o * dd + j) = acc
       }
       val got = new Array[Float]((t + 1) * dd)
-      val w0T = Simd.transposed(w0, 2 * dd, dd)
-      val w1T = Simd.transposed(w1, 2 * dd, dd)
+      val w0T = Simd.transpose(w0, 2 * dd, dd)
+      val w1T = Simd.transpose(w1, 2 * dd, dd)
       SimdKernels.gemvT(w1T, b, 2 * dd, dd, cat, 0, got, 0)
       for (o <- 1 until t) {
         SimdKernels.gemvT(w0T, b, 2 * dd, dd, cat, (o - 1) * 2 * dd, got, o * dd)

@@ -1,25 +1,17 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.kg.{DocGen, Mentions}
 
 /** Variant decoders (N6 bidirectional, N8/N18 multi-label, N12 contextual):
   * determinism, reference-shape invariants, non-degeneracy, and
   * distribution-invariance (partitioning must not change results).
   */
-class PyramidVariantsSpec extends AnyFunSuite {
+class PyramidVariantsSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
   private val cfg = ModelConfig.tiny
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("variants-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val docs = DocGen.docs(spark, sfDir)
   private lazy val model = Mentions.buildModel(docs, cfg)

@@ -1,24 +1,16 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core._
 
 /** Edge probes (verify-skill checklist): empty corpus, media-only docs,
   * single-token docs, 400+-token docs, out-of-alphabet unicode — through the
   * full mention/variant/triple machinery.
   */
-class EdgeCasesSpec extends AnyFunSuite {
+class EdgeCasesSpec extends AnyFunSuite with SparkSpec {
   private val cfg = ModelConfig.tiny
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("edge-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def model(docs: Seq[PyramidDoc]): Mentions.Model = {
     import spark.implicits._

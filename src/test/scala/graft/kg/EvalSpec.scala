@@ -1,23 +1,16 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Eval surface (M4-M8, M13, E3) vs sequential ports of
   * `utils/metrics.py` — confusion counting as set algebra and the exact
   * `calculate_metrics` math — plus the E3 gate: the distributed pipeline
   * scores P = R = 1.0 against GoldRef on the eval slice.
   */
-class EvalSpec extends AnyFunSuite {
+class EvalSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("eval-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   import org.apache.spark.sql.functions._
 

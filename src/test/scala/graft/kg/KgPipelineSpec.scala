@@ -1,7 +1,8 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 import graft.core.ModelConfig
 
 /** End-to-end distributed-vs-sequential equality at sf0.001 (SURVEY.md §5.4):
@@ -9,16 +10,8 @@ import graft.core.ModelConfig
   * exactly — per-row span-sequence equality for mentions, set equality
   * (P = R = 1.0) for triples.
   */
-class KgPipelineSpec extends AnyFunSuite {
+class KgPipelineSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("kg-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val goldDocs: Seq[PyramidDoc] = {
     import spark.implicits._

@@ -1,22 +1,15 @@
 package graft.kg
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Checkpoint/resume + lineage tests for the ops layer (north_rule:
   * "resumable from checkpoint with per-partition lineage + metrics").
   */
-class KgRunnerSpec extends AnyFunSuite {
+class KgRunnerSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("runner-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def tripleSet(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet

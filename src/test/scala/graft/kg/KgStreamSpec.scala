@@ -1,22 +1,15 @@
 package graft.kg
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 
 /** Streaming KG ingest == batch pipeline: the stream path (file source →
   * streaming detect mapPartitions → stream-static broadcast link) must emit
   * exactly the rows the batch slice pipeline produces.
   */
-class KgStreamSpec extends AnyFunSuite {
+class KgStreamSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("kgstream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private def rowSet(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.mkString("|")).toSet

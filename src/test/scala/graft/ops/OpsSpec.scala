@@ -1,23 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSpec
 import graft.functions.Fns
 
 /** Training-data operator tests: custom expression semantics (interpreted ==
   * codegen), streaming == batch, LSH recall sanity, dedup invariants.
   */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   test("CosineSimilarity: interpreted and codegen paths agree with plain Scala") {
     import spark.implicits._

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSpec
 import graft.core.Tok
 import graft.kg.{Mentions, ModelStore}
 
@@ -10,16 +10,8 @@ import graft.kg.{Mentions, ModelStore}
   * loops (`utils/data.py`) over the SAME staged fixtures — plus ModelStore
   * (S11) round-trip.
   */
-class ReadersSpec extends AnyFunSuite {
+class ReadersSpec extends AnyFunSuite with SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("readers-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
 
   private lazy val stageDir = ReaderStage.stage(spark, sfDir).toString
   private lazy val baseDocs = ReaderStage.baseDocs(spark, sfDir)
